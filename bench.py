@@ -396,22 +396,28 @@ def main() -> None:
     )
     with open(sidecar, "w") as fh:
         json.dump(full, fh, indent=1)
+    # every query key at 1 decimal; load and contamination as counts (the
+    # detail is in the sidecar)
     compact = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "load": load_summary,
-        "contaminated_queries": contaminated,
+        "queries": {k: round(v, 1) for k, v in timings.items()},
+        "unclean_windows": sum(not _is_clean(c) for c in all_ctx),
+        "contaminated_queries": len(contaminated),
         "sf": sf_val,
     }
     line = json.dumps(compact)
-    if len(line) > 1900:  # belt-and-braces: never exceed the tail capture
-        slowest = dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])[:40]
-        )
-        compact["queries"] = {k: round(v, 2) for k, v in slowest.items()}
-        compact["queries_truncated_to_slowest"] = len(slowest)
+    # belt-and-braces for the 2000-char tail capture: drop the fastest
+    # queries' timings first and name every dropped key (the 70 names
+    # alone take ~1.3k chars, so the line always fits)
+    omitted: list[str] = []
+    fastest_first = sorted(timings, key=timings.get)
+    while len(line) > 1900 and fastest_first:
+        name = fastest_first.pop(0)
+        del compact["queries"][name]
+        omitted.append(name)
+        compact["queries_omitted"] = omitted
         line = json.dumps(compact)
     print(line)
 

@@ -10,7 +10,7 @@ from local[.] to a 1000-executor cluster.
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Optional, Sequence, Union
+from typing import TYPE_CHECKING, Any, Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +32,10 @@ from graphframes_spark.util import (
 if TYPE_CHECKING:
     from graphframes_spark.lib.aggregate_neighbors import AggregateNeighbors
     from graphframes_spark.pregel import Pregel
+
+
+#: compiled query DataFrames kept per GraphFrame (find patterns, degrees)
+_MEMO_SIZE = 32
 
 
 class GraphFrame:
@@ -61,6 +65,8 @@ class GraphFrame:
             )
         self._vertices = v
         self._edges = e
+        # compiled query DataFrames by key (see _memo)
+        self._plans: dict[tuple, DataFrame] = {}
 
     # ---------------------------------------------------------------- basics
 
@@ -75,6 +81,22 @@ class GraphFrame:
     @property
     def spark(self) -> SparkSession:
         return self._vertices.sparkSession
+
+    def _memo(self, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+        """The DataFrame ``build`` returns, compiled once per key and graph.
+
+        Exact because both frames of a GraphFrame are immutable and Spark
+        substitutes cached data when a query runs, not when it is built.
+        Holds plans, not data; the oldest entry goes beyond _MEMO_SIZE."""
+        df = self._plans.get(key)
+        if df is None:
+            df = build()
+            if len(self._plans) >= _MEMO_SIZE:
+                # pop with a default: a thread sharing this graph may have
+                # evicted the same entry
+                self._plans.pop(next(iter(self._plans)), None)
+            self._plans[key] = df
+        return df
 
     def __repr__(self) -> str:
         v_cols = ", ".join(self._vertices.columns)
@@ -272,25 +294,23 @@ class GraphFrame:
 
     @property
     def outDegrees(self) -> DataFrame:
-        e = self._edges
-        return e.groupBy(e[SRC].alias(ID)).agg(
-            F.count("*").cast("int").alias("outDegree")
-        )
+        return self._memo(("outDegrees",), lambda: self._count_by(F.col(SRC), "outDegree"))
 
     @property
     def inDegrees(self) -> DataFrame:
-        e = self._edges
-        return e.groupBy(e[DST].alias(ID)).agg(
-            F.count("*").cast("int").alias("inDegree")
-        )
+        return self._memo(("inDegrees",), lambda: self._count_by(F.col(DST), "inDegree"))
 
     @property
     def degrees(self) -> DataFrame:
-        e = self._edges
+        return self._memo(
+            ("degrees",), lambda: self._count_by(F.explode(F.array(SRC, DST)), "degree")
+        )
+
+    def _count_by(self, key: Column, name: str) -> DataFrame:
         return (
-            e.select(F.explode(F.array(SRC, DST)).alias(ID))
+            self._edges.select(key.alias(ID))
             .groupBy(ID)
-            .agg(F.count("*").cast("int").alias("degree"))
+            .agg(F.count("*").cast("int").alias(name))
         )
 
     def _type_degree(
@@ -426,7 +446,17 @@ class GraphFrame:
 
     def find(self, pattern: str) -> DataFrame:
         """Motif finding (GraphFrame.scala:601-674). See patterns module for
-        the DSL grammar."""
+        the DSL grammar.
+
+        The result is compiled once per pattern and graph and shared by
+        later calls with the same pattern: filter or project it freely,
+        but do not ``unpersist`` it."""
+        from graphframes_spark.harness import get_conf
+
+        sort = get_conf(self.spark, "motif.sortVarLength", "true")
+        return self._memo(("find", pattern, sort), lambda: self._find(pattern, sort))
+
+    def _find(self, pattern: str, sort: str) -> DataFrame:
         stripped = "".join(pattern.split())
         m = P.VAR_LENGTH.match(stripped)
         if m:
@@ -436,17 +466,17 @@ class GraphFrame:
                     f"Unbounded length pattern {pattern} is not supported! "
                     "Please use a pattern of defined length."
                 )
-            return self._find_var_length(src, name, int(mn), int(mx), direction, dst)
+            return self._find_var_length(src, name, int(mn), int(mx), direction, dst, sort)
         m = P.FIXED_LENGTH_UNDIRECTED.match(stripped)
         if m:
             src, name, hop, dst = m.groups()
             if hop == "":
                 raise InvalidPatternError("Missing hop!")
-            return self._find_var_length(src, name, int(hop), int(hop), "", dst)
+            return self._find_var_length(src, name, int(hop), int(hop), "", dst, sort)
         return self._find_augmented(pattern)
 
     def _find_var_length(
-        self, src: str, name: str, mn: int, mx: int, direction: str, dst: str
+        self, src: str, name: str, mn: int, mx: int, direction: str, dst: str, sort: str
     ) -> DataFrame:
         out_specs = [(hop, f"({src})-[{name}*{hop}]->({dst})", "out")
                      for hop in range(mx, mn - 1, -1)]
@@ -469,9 +499,7 @@ class GraphFrame:
         # the reference globally sorts var-length results (GraphFrame.scala:656)
         # — a full-result sort that is pure overhead at scale; keep it for
         # parity but allow opting out via conf
-        from graphframes_spark.harness import get_conf
-
-        if get_conf(self.spark, "motif.sortVarLength", "true") == "true":
+        if sort == "true":
             ret = ret.orderBy("_hop", "_direction")
         return ret
 

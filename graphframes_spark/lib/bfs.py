@@ -2,25 +2,32 @@
 
 Semantics follow the reference
 (/root/reference/core/src/main/scala/org/graphframes/lib/BFS.scala:83-231):
-grow a path-join one hop at a time, probing each hop with ``take(1)`` for
-a match of the target expression; return the first (shortest) hop's full
-paths with columns ``from, e0, v1, e1, ..., to`` (each a struct). Paths
-are non-backtracking (no vertex repeated within a path).
+grow a path-join one hop at a time, probing each hop for a match of the
+target expression; return the first (shortest) hop's full paths with
+columns ``from, e0, v1, e1, ..., to`` (each a struct). Paths are
+non-backtracking (no vertex repeated within a path).
 
 Instead of rewriting the from/to expressions against nested structs (the
 reference uses a Catalyst shim), we evaluate them once on the vertex table
 and semi-join the frontier against the matching id sets — same results,
 public API only.
+
+One Spark action per hop explored: each hop is an eager checkpoint whose
+materialization job also fills Observations — the target hits and path
+count of that hop and, on hop 0, the sizes of the from set, the to set
+and their intersection (the reference's separate seed probes). Only when
+hop 0 has no path can one more action run (see the hop-0 comment).
 """
 
 from __future__ import annotations
 
 from typing import TYPE_CHECKING, Optional, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graphframes_spark.util import DST, ID, SRC, nest_as_col
+from graphframes_spark.pregel import _observed_count
+from graphframes_spark.util import ID, nest_as_col
 
 if TYPE_CHECKING:
     from graphframes_spark.graphframe import GraphFrame
@@ -33,65 +40,39 @@ def bfs(
     edge_filter: Optional[Union[str, Column]] = None,
     max_path_length: int = 10,
 ) -> DataFrame:
-    from graphframes_spark.harness import get_conf
-
-    spark = graph.spark
     v = graph.vertices
-    # round-12 action folding (guide §1.4): "fold" (default) answers the
-    # three seed probes in ONE aggregate pass and rides each hop's target
-    # probe on the checkpoint's materialization job via Observation;
-    # "take" keeps the legacy per-probe take(1) actions (ablation arm).
-    fold = get_conf(spark, "bfs.probe", "fold") != "take"
+    to_col = F.expr(to_expr) if isinstance(to_expr, str) else to_expr
 
     from_df = v.filter(from_expr)
-    to_df = v.filter(to_expr)
-    if fold:
-        from_col = F.expr(from_expr) if isinstance(from_expr, str) else from_expr
-        to_col = F.expr(to_expr) if isinstance(to_expr, str) else to_expr
-        seed = v.select(
-            F.count_if(from_col).alias("_nf"),
-            F.count_if(to_col).alias("_nt"),
-            F.count_if(from_col & to_col).alias("_nb"),
-        ).first()
-        if not seed or not seed["_nf"] or not seed["_nt"]:
-            return v.limit(0)
-        both = bool(seed["_nb"])
-    else:
-        if not from_df.take(1) or not to_df.take(1):
-            return v.limit(0)
-        both = bool(from_df.filter(to_expr).take(1))
-
-    if both:
-        from_equals_to = from_df.filter(to_expr)
-        return from_equals_to.select(
-            nest_as_col(from_equals_to, "from"), nest_as_col(from_equals_to, "to")
-        )
+    from_equals_to = from_df.filter(to_expr)
+    to_ids = v.filter(to_expr).select(F.col(ID).alias("_to_id"))
 
     g2 = graph.filterEdges(edge_filter) if edge_filter is not None else graph
     a2b = g2.find("(a)-[e]->(b)")
 
-    from_ids = from_df.select(F.col(ID).alias("_from_id"))
-    to_ids = to_df.select(F.col(ID).alias("_to_id"))
+    # the seed counts ride hop 0's checkpoint job instead of an action
+    seed_from, seed_to = Observation(), Observation()
+    from_ids = from_df.observe(
+        seed_from, F.count(F.lit(1)).alias("n"), F.count_if(to_col).alias("both")
+    ).select(F.col(ID).alias("_from_id"))
+    seed_to_ids = to_ids.observe(seed_to, F.count(F.lit(1)).alias("n"))
 
-    paths: Optional[DataFrame] = None
+    paths = (
+        a2b.join(from_ids, a2b["a"][ID] == F.col("_from_id"), "left_semi")
+        .filter(F.col("a")[ID] != F.col("b")[ID])
+        .withColumnRenamed("a", "from")
+        .withColumnRenamed("e", "e0")
+        .withColumnRenamed("b", "v1")
+    )
     found: Optional[DataFrame] = None
 
-    for hop in range(max_path_length):
+    for hop in range(max(max_path_length, 1)):
         next_vertex = f"v{hop + 1}"
-        next_edge = f"e{hop}"
-        if hop == 0:
-            paths = (
-                a2b.join(from_ids, a2b["a"][ID] == F.col("_from_id"), "left_semi")
-                .filter(F.col("a")[ID] != F.col("b")[ID])
-                .withColumnRenamed("a", "from")
-                .withColumnRenamed("e", next_edge)
-                .withColumnRenamed("b", next_vertex)
-            )
-        else:
+        if hop > 0:
             prev_vertex = f"v{hop}"
             next_links = (
                 a2b.withColumnRenamed("a", prev_vertex)
-                .withColumnRenamed("e", next_edge)
+                .withColumnRenamed("e", f"e{hop}")
                 .withColumnRenamed("b", next_vertex)
             )
             joined = paths.join(
@@ -104,45 +85,53 @@ def bfs(
                 check = check & (joined[f"v{i}"][ID] != joined[next_vertex][ID])
             paths = joined.filter(check)
 
-        if fold:
-            # ONE action per hop: the target-set membership is attached as
-            # a flag via a left-outer join (vertex ids are unique, so row
-            # counts are untouched) and counted by an Observation riding
-            # the eager checkpoint's materialization job — the legacy
-            # separate take(1) probe re-executed the frontier pipeline
-            # once per hop.
-            from pyspark.sql import Observation
-
-            from graphframes_spark.pregel import _observed_count
-
-            obs = Observation()
-            tagged = (
-                paths.join(
-                    to_ids.withColumn("_bfs_hit", F.lit(1)),
-                    paths[next_vertex][ID] == F.col("_to_id"),
-                    "left_outer",
-                )
-                .drop("_to_id")
-                .observe(obs, F.count(F.col("_bfs_hit")).alias("hits"))
+        # the target-set membership is attached as a flag via a left-outer
+        # join (vertex ids are unique, so row counts are untouched) and
+        # counted by an Observation riding the eager checkpoint's job
+        obs = Observation()
+        tagged = (
+            paths.join(
+                (seed_to_ids if hop == 0 else to_ids).withColumn("_bfs_hit", F.lit(1)),
+                paths[next_vertex][ID] == F.col("_to_id"),
+                "left_outer",
             )
-            tagged = tagged.localCheckpoint(eager=True)
-            if _observed_count(obs, "hits") > 0:
-                found = tagged.filter(F.col("_bfs_hit").isNotNull()).drop(
-                    "_bfs_hit"
-                ).withColumnRenamed(next_vertex, "to")
-                break
-            paths = tagged.drop("_bfs_hit")
-            continue
-
-        # legacy per-hop shape: checkpoint, then a separate take(1) probe
-        paths = paths.localCheckpoint(eager=True)
-
-        candidate = paths.join(
-            to_ids, paths[next_vertex][ID] == F.col("_to_id"), "left_semi"
+            .drop("_to_id")
+            .observe(
+                obs,
+                F.count(F.col("_bfs_hit")).alias("hits"),
+                F.count(F.lit(1)).alias("paths"),
+            )
         )
-        if candidate.take(1):
-            found = candidate.withColumnRenamed(next_vertex, "to")
+        tagged = tagged.localCheckpoint(eager=True)
+
+        if hop == 0:
+            # when hop 0 has no path, AQE may replace the from branch with
+            # an empty relation and drop its Observation (it reads 0); no
+            # longer path exists then, so one probe of from ∩ to decides
+            # whether a zero-length path answers
+            n_from = _observed_count(seed_from, "n")
+            if n_from:
+                both = _observed_count(seed_from, "both") > 0
+            else:
+                both = bool(from_equals_to.take(1))
+            if both:
+                return from_equals_to.select(
+                    nest_as_col(from_equals_to, "from"), nest_as_col(from_equals_to, "to")
+                )
+            # AQE drops the to branch's Observation when hop 0 has no path
+            # or the to set is empty: either way no path reaches the to set
+            if not n_from or not _observed_count(seed_to, "n"):
+                break
+        if hop < max_path_length and _observed_count(obs, "hits") > 0:
+            found = (
+                tagged.filter(F.col("_bfs_hit").isNotNull())
+                .drop("_bfs_hit")
+                .withColumnRenamed(next_vertex, "to")
+            )
             break
+        if _observed_count(obs, "paths") == 0:
+            break  # no path to extend
+        paths = tagged.drop("_bfs_hit")
 
     if found is None:
         return v.limit(0)

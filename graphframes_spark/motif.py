@@ -226,10 +226,24 @@ def _find_incremental(
             raise InvalidPatternError(
                 "A negated term cannot be the only constraint in a motif."
             )
-        df, names = _find_incremental(gf, prev_patterns, prev, prev_names, pattern.child)
-        if df is not None:
-            # Dataset.except is EXCEPT DISTINCT -> PySpark subtract
-            df = prev.subtract(df)
-        return df, names
+        # The reference computes prev EXCEPT DISTINCT (prev ⋈ edge), which
+        # evaluates prev twice. A row of prev is in (prev ⋈ edge) iff some
+        # edge matches it, so an anti-join plus distinct returns the same
+        # rows from one evaluation of prev.
+        edge = pattern.child
+        tmp = f"__tmp{next(_tmp_counter)}"
+        e_ren = nest_e(tmp)
+        cond = None
+        for v, field in ((edge.src, SRC), (edge.dst, DST)):
+            if not isinstance(v, P.NamedVertex):
+                continue
+            if not _seen(v, prev_patterns):
+                raise InvalidPatternError(
+                    f"Negated term references vertex '{v.name}' before a "
+                    "positive term binds it."
+                )
+            c = fld(e_ren, tmp, field) == fld(prev, v.name, ID)
+            cond = c if cond is None else cond & c
+        return prev.join(e_ren, cond, "left_anti").distinct(), prev_names
 
     raise InvalidPatternError(f"Unknown pattern node: {pattern!r}")  # pragma: no cover

@@ -239,12 +239,15 @@ def assert_valid_patterns(patterns: list[Pattern]) -> None:
     for p in patterns:
         if isinstance(p, Negation):
             child = p.child
-            inner = child.edge if isinstance(child, UndirectedEdge) else child
-            if isinstance(inner, NamedEdge):
+            if isinstance(child, UndirectedEdge):
+                raise InvalidPatternError(
+                    "Motif finding does not support negated undirected edges."
+                )
+            if isinstance(child, NamedEdge):
                 raise InvalidPatternError(
                     "Motif finding does not support negated named edges."
                 )
-            if _is_fully_anonymous(inner):
+            if _is_fully_anonymous(child):
                 raise InvalidPatternError(
                     "Motif finding does not support completely anonymous negated edges."
                 )

@@ -193,6 +193,101 @@ def test_bfs_from_equals_to(friends):
     assert paths.count() == 5
 
 
+def test_bfs_empty_to_set(friends):
+    paths = friends.bfs("name = 'Alice'", "name = 'Zed'")
+    assert paths.columns == friends.vertices.columns
+    assert paths.count() == 0
+
+
+def test_bfs_empty_from_set(friends):
+    paths = friends.bfs("name = 'Zed'", "name = 'Alice'")
+    assert paths.columns == friends.vertices.columns
+    assert paths.count() == 0
+
+
+def test_bfs_from_overlaps_to(friends):
+    # Alice is in both sets: the zero-length path wins over a->b
+    paths = friends.bfs("age > 33", "age < 35")
+    assert paths.columns == ["from", "to"]
+    assert [(r["from"]["id"], r["to"]["id"]) for r in paths.collect()] == [("a", "a")]
+
+
+def test_bfs_overlap_with_every_edge_filtered(friends):
+    paths = friends.bfs("age > 33", "age < 35", edgeFilter="relationship = 'none'")
+    assert [(r["from"]["id"], r["to"]["id"]) for r in paths.collect()] == [("a", "a")]
+    none = friends.bfs("name = 'Alice'", "name = 'Bob'", edgeFilter="relationship = 'none'")
+    assert none.columns == friends.vertices.columns
+    assert none.count() == 0
+
+
+def test_bfs_edge_filter_forces_longer_path(friends):
+    # unfiltered, Esther reaches Bob by two 3-hop paths (via David and via
+    # Fanny); follow edges keep the one via Fanny, and friend edges alone
+    # never reach Charlie
+    paths = friends.bfs(
+        "name = 'Esther'", "name = 'Bob'", edgeFilter="relationship = 'follow'"
+    )
+    rows = paths.collect()
+    assert paths.columns == ["from", "e0", "v1", "e1", "v2", "e2", "to"]
+    assert [(r["v1"]["id"], r["v2"]["id"]) for r in rows] == [("f", "c")]
+    friend_only = friends.bfs(
+        "name = 'Esther'", "name = 'Charlie'", edgeFilter="relationship = 'friend'"
+    )
+    assert friend_only.count() == 0
+
+
+def test_bfs_path_longer_than_max_length(spark):
+    g = chain_graph(spark, 6)
+    assert g.bfs("id = 0", "id = 5", maxPathLength=4).count() == 0
+    rows = g.bfs("id = 0", "id = 5", maxPathLength=5).collect()
+    assert len(rows) == 1
+    assert [rows[0][f"v{i}"]["id"] for i in range(1, 5)] == [1, 2, 3, 4]
+    # a dead end stops the search before maxPathLength
+    assert g.bfs("id = 5", "id = 0").count() == 0
+
+
+def _sql_executions(spark, description):
+    """SQL executions run under a job description, from the status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    n = 0
+    while it.hasNext():
+        n += it.next().description() == description
+    return n
+
+
+@pytest.mark.parametrize(
+    "from_expr, to_expr, hops", [("id = 0", "id = 3", 3), ("id = 1", "id = 2", 1)]
+)
+def test_bfs_one_sql_execution_per_hop(spark, from_expr, to_expr, hops):
+    g = chain_graph(spark, 6)
+    description = f"bfs {from_expr} -> {to_expr}"
+    paths = _bfs_in_job_group(spark, description, g, from_expr, to_expr)
+    # the seed counts ride hop 0: no execution beyond one per hop explored
+    assert _sql_executions(spark, description) == hops
+    assert paths.count() == 1
+
+
+def test_bfs_dead_end_stops_after_hop_zero(spark):
+    g = chain_graph(spark, 6)
+    description = "bfs dead end"
+    paths = _bfs_in_job_group(spark, description, g, "id = 5", "id = 0")
+    # hop 0 finds no path, so the search stops there; when AQE prunes the
+    # empty from branch, one probe of from ∩ to may follow
+    assert _sql_executions(spark, description) <= 2
+    assert paths.count() == 0
+
+
+def _bfs_in_job_group(spark, description, g, from_expr, to_expr):
+    sc = spark.sparkContext
+    sc.setJobGroup(description, description)
+    try:
+        return g.bfs(from_expr, to_expr)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_aggregate_messages(friends):
     from graphframes_spark.lib.aggregate_messages import AggregateMessages as AM
 

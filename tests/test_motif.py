@@ -1,4 +1,8 @@
+import pytest
 from pyspark.sql import functions as F
+
+from graphframes_spark import GraphFrame
+from graphframes_spark.util import InvalidPatternError
 
 
 def test_find_simple_edge(friends):
@@ -92,3 +96,147 @@ def test_find_filter_on_attributes(friends):
     )
     got = {(r["a"]["id"], r["b"]["id"]) for r in df.collect()}
     assert got == {("b", "c"), ("f", "c")}
+
+
+# ------------------------------------------------ memoized plans, negations
+
+
+def _rows(df):
+    return sorted(map(str, df.collect()))
+
+
+def test_find_same_pattern_returns_same_dataframe(friends):
+    pattern = "(a)-[]->(b); (b)-[]->(c)"
+    assert friends.find(pattern) is friends.find(pattern)
+    assert friends.find(pattern) is not friends.find("(a)-[]->(b)")
+    assert friends.degrees is friends.degrees
+    assert friends.inDegrees is friends.inDegrees
+    assert friends.outDegrees is friends.outDegrees
+
+
+def test_find_memo_is_bounded(spark):
+    from graphframes_spark.graphframe import _MEMO_SIZE
+
+    v = spark.createDataFrame([(1,), (2,)], ["id"])
+    g = GraphFrame(v, spark.createDataFrame([(1, 2)], ["src", "dst"]))
+    first = g.find("(x0)-[]->(y)")
+    assert g.find("(x0)-[]->(y)") is first
+    for i in range(1, _MEMO_SIZE + 1):
+        g.find(f"(x{i})-[]->(y)")
+    # the oldest entry went; the newest is still shared
+    assert g.find("(x0)-[]->(y)") is not first
+    assert g.find(f"(x{_MEMO_SIZE})-[]->(y)") is g.find(f"(x{_MEMO_SIZE})-[]->(y)")
+
+
+@pytest.mark.parametrize(
+    "pattern",
+    [
+        "(a)-[e]-(b)",
+        "(a)-[e*1..2]->(b)",
+        "(a)-[e*2]-(b)",
+        "(a)-[]->(); ()-[]->(a)",
+        "(a)-[e]->(b); !(b)-[]->(a)",
+    ],
+)
+def test_memoized_find_matches_fresh_graph(friends, pattern):
+    friends.find(pattern).count()  # compile and run once
+    fresh = GraphFrame(friends.vertices, friends.edges)
+    assert _rows(friends.find(pattern)) == _rows(fresh.find(pattern))
+
+
+def test_sort_var_length_conf_replans(spark, friends):
+    key = "spark.graphframes_spark.motif.sortVarLength"
+    pattern = "(a)-[e*1..2]->(b)"
+    sorted_df = friends.find(pattern)
+    spark.conf.set(key, "false")
+    try:
+        unsorted_df = friends.find(pattern)
+        assert unsorted_df is not sorted_df
+        assert "Sort" not in unsorted_df._jdf.queryExecution().analyzed().toString()
+    finally:
+        spark.conf.unset(key)
+    assert friends.find(pattern) is sorted_df
+    assert "Sort" in sorted_df._jdf.queryExecution().analyzed().toString()
+    assert _rows(unsorted_df) == _rows(sorted_df)
+
+
+def test_subgraphs_do_not_share_plans(friends):
+    pattern = "(a)-[e]->(b)"
+    whole = friends.find(pattern)
+    by_edges = friends.filterEdges("relationship = 'friend'")
+    by_vertices = friends.filterVertices("age < 35")
+    assert by_edges.find(pattern) is not whole
+    assert by_vertices.find(pattern) is not whole
+    assert by_edges.degrees is not friends.degrees
+    assert whole.count() == 8
+    assert by_edges.find(pattern).count() == 4
+    assert by_vertices.find(pattern).count() == 3  # a->e, e->d, d->a
+
+
+def test_cache_after_memoized_find(spark):
+    v = spark.createDataFrame([(i,) for i in range(5)], ["id"])
+    e = spark.createDataFrame([(i, (i + 1) % 5) for i in range(5)], ["src", "dst"])
+    g = GraphFrame(v, e)
+    pattern = "(a)-[]->(b); (b)-[]->(c)"
+    before = _rows(g.find(pattern))
+    g.cache()
+    try:
+        assert g.find(pattern) is g.find(pattern)
+        assert _rows(g.find(pattern)) == before
+        assert _rows(g.find(pattern).filter("a.id = 1")) == [
+            r for r in before if "a=Row(id=1)" in r
+        ]
+    finally:
+        g.unpersist()
+
+
+@pytest.fixture(scope="module")
+def multigraph(spark):
+    """Parallel edges, a self-loop and null vertex attributes."""
+    v = spark.createDataFrame(
+        [(1, "x"), (2, None), (3, "y"), (4, None)], "id long, attr string"
+    )
+    e = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 1), (2, 3), (3, 3), (3, 4), (4, 1)], "src long, dst long"
+    )
+    return GraphFrame(v, e)
+
+
+@pytest.mark.parametrize(
+    "negated, matched",
+    [
+        ("!(b)-[]->(a)", "(b)-[]->(a)"),
+        ("!(a)-[]->()", "(a)-[]->()"),
+        ("!()-[]->(b)", "()-[]->(b)"),
+        ("!(a)-[]->(a)", "(a)-[]->(a)"),
+        ("!(b)-[]->(b)", "(b)-[]->(b)"),
+    ],
+)
+def test_negation_is_except_distinct(multigraph, negated, matched):
+    # the reference's definition: prev EXCEPT DISTINCT (prev ⋈ negated edge)
+    prev = multigraph.find("(a)-[]->(b)")
+    joined = multigraph.find(f"(a)-[]->(b); {matched}").select("a", "b")
+    got = multigraph.find(f"(a)-[]->(b); {negated}")
+    assert got.columns == ["a", "b"]
+    assert _rows(got) == _rows(prev.subtract(joined))
+
+
+def test_negation_collapses_parallel_edges(multigraph):
+    # the two parallel 1->2 edges match (a=1, b=2) twice; EXCEPT DISTINCT
+    # keeps one row per binding
+    got = multigraph.find("(a)-[]->(b); !(a)-[]->(a)").filter("a.id = 1")
+    assert [(r["a"]["id"], r["b"]["id"]) for r in got.collect()] == [(1, 2)]
+    named = multigraph.find("(a)-[e]->(b); !(b)-[]->(b)").filter("a.id = 1")
+    assert named.count() == 1
+
+
+def test_negation_plan_is_anti_join(multigraph):
+    df = multigraph.find("(a)-[]->(b); !(b)-[]->(a)")
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "Except" not in analyzed
+    assert "LeftAnti" in analyzed
+
+
+def test_negation_of_later_bound_vertex_rejected(multigraph):
+    with pytest.raises(InvalidPatternError):
+        multigraph.find("(a)-[]->(b); !(b)-[]->(c); (c)-[]->(a)")

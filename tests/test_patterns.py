@@ -64,6 +64,8 @@ def test_invalid_patterns():
     with pytest.raises(InvalidPatternError):
         P.parse("(a)-[]->(b); !(a)-[e]->(b)")  # named edge in negation
     with pytest.raises(InvalidPatternError):
+        P.parse("(a)-[]->(b); !(a)-[]-(b)")  # undirected edge in negation
+    with pytest.raises(InvalidPatternError):
         P.parse("(a)-[a]->(b)")  # name reuse vertex/edge
     with pytest.raises(InvalidPatternError):
         P.parse("(a)-[e]->(b); (b)-[e]->(c)")  # duplicate edge name
